@@ -42,10 +42,11 @@ import argparse
 import glob
 import os
 import sys
-from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from changegen_spark.operators.changes import assemble_changeset
 
 
 def _parse_geo_columns(df: DataFrame) -> DataFrame:
@@ -56,12 +57,6 @@ def _parse_geo_columns(df: DataFrame) -> DataFrame:
         if cand in df.columns and dict(df.dtypes)[cand] == "string":
             df = df.withColumn(cand, parse_wkt(F.col(cand)))
     return df
-
-
-def _load_geo_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet table, parsing any WKT geometry column into the
-    engine's geometry struct."""
-    return _parse_geo_columns(spark.read.parquet(path))
 
 
 class ParquetSource:
@@ -76,7 +71,7 @@ class ParquetSource:
         return discover_new_tables(self.dbdir, suffixes)
 
     def load_geo(self, name: str) -> DataFrame:
-        return _load_geo_table(self.spark, os.path.join(self.dbdir, f"{name}.parquet"))
+        return _parse_geo_columns(self.load_plain(name))
 
     def load_plain(self, name: str) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.dbdir, f"{name}.parquet"))
@@ -106,6 +101,14 @@ class JdbcSource:
         return self.catalog.url
 
 
+# geometry type → (pipeline table, geometry column name the pipeline reads)
+_GEO_PARTS = {
+    "Point": ("new_points", "geom"),
+    "LineString": ("new_ways", "geometry"),
+    "Polygon": ("new_polygons", "geometry"),
+}
+
+
 def _split_by_gtype(df: DataFrame, geom_col: str) -> dict[str, DataFrame]:
     """P4 geometry-type dispatch; Multi*/unknown rejected like the reference
     (generator.py:603-606)."""
@@ -113,21 +116,10 @@ def _split_by_gtype(df: DataFrame, geom_col: str) -> dict[str, DataFrame]:
         r["g"]
         for r in df.select(F.col(f"{geom_col}.gtype").alias("g")).distinct().collect()
     ]
-    bad = [g for g in gtypes if g not in ("Point", "LineString", "Polygon")]
+    bad = [g for g in gtypes if g not in _GEO_PARTS]
     if bad:
         raise ValueError(f"unsupported geometry types {bad}: Multi* geometries are not supported")
-    return {
-        g: df.filter(F.col(f"{geom_col}.gtype") == g)
-        for g in ("Point", "LineString", "Polygon")
-        if g in gtypes
-    }
-
-
-def _with_fkey(part: DataFrame, geom_col: str) -> DataFrame:
-    """Stable row-unique feature key (see ``operators/keys.py``)."""
-    from changegen_spark.operators.keys import feature_key
-
-    return feature_key(part, geom_col)
+    return {g: df.filter(F.col(f"{geom_col}.gtype") == g) for g in _GEO_PARTS if g in gtypes}
 
 
 def discover_new_tables(dbdir: str, suffixes: list[str]) -> list[str]:
@@ -142,46 +134,33 @@ def discover_new_tables(dbdir: str, suffixes: list[str]) -> list[str]:
     return names
 
 
-def load_new_parts(
-    spark: SparkSession, source, table_names: list[str]
-) -> dict[str, DataFrame]:
-    """Load + geometry-dispatch the named feature tables into the pipeline's
-    ``new_points`` / ``new_ways`` / ``new_polygons`` parts.
+def load_new_parts(source, table_names: list[str]) -> dict[str, DataFrame]:
+    """Load + geometry-dispatch the named feature tables (from a
+    ParquetSource/JdbcSource) into the pipeline's ``new_points`` /
+    ``new_ways`` / ``new_polygons`` parts."""
+    from changegen_spark.operators.keys import feature_key
 
-    ``source`` is a ParquetSource/JdbcSource (a plain dbdir string is also
-    accepted for backward compatibility)."""
-    if isinstance(source, str):
-        source = ParquetSource(spark, source)
-    points, lines, polys = [], [], []
+    found: dict[str, list[DataFrame]] = {}
     for name in table_names:
         df = source.load_geo(name)
         geom_col = "geometry" if "geometry" in df.columns else "geom"
         for gtype, part in _split_by_gtype(df, geom_col).items():
-            keyed = _with_fkey(part, geom_col)
-            if gtype == "Point":
-                if "geom" not in keyed.columns:
-                    keyed = keyed.withColumnRenamed(geom_col, "geom")
-                # no id synthesis: the pipeline's point path falls back to a
-                # row-unique feature key when id is absent or NULL (a crc32
-                # here would risk 32-bit collisions at scale)
-                points.append(keyed)
-            elif gtype == "LineString":
-                if "geometry" not in keyed.columns:
-                    keyed = keyed.withColumnRenamed(geom_col, "geometry")
-                lines.append(keyed)
-            else:
-                if "geometry" not in keyed.columns:
-                    keyed = keyed.withColumnRenamed(geom_col, "geometry")
-                polys.append(keyed.withColumnRenamed("__fkey", "name") if "name" not in keyed.columns else keyed)
-
-    parts: dict[str, DataFrame] = {}
-    if points:
-        parts["new_points"] = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), points)
-    if lines:
-        parts["new_ways"] = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), lines)
-    if polys:
-        parts["new_polygons"] = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), polys)
-    return parts
+            # stable row-unique feature key (see ``operators/keys.py``); no
+            # point id synthesis: the pipeline's point path falls back to it
+            # when id is absent or NULL (a crc32 here would risk 32-bit
+            # collisions at scale)
+            keyed = feature_key(part, geom_col)
+            table, want = _GEO_PARTS[gtype]
+            if want not in keyed.columns:
+                keyed = keyed.withColumnRenamed(geom_col, want)
+            if gtype == "Polygon" and "name" not in keyed.columns:
+                keyed = keyed.withColumnRenamed("__fkey", "name")
+            found.setdefault(table, []).append(keyed)
+    return {
+        table: assemble_changeset(*found[table])
+        for table, _ in _GEO_PARTS.values()
+        if table in found
+    }
 
 
 def load_extract(spark: SparkSession, osmsrc: str) -> dict[str, DataFrame]:
@@ -199,47 +178,6 @@ def load_extract(spark: SparkSession, osmsrc: str) -> dict[str, DataFrame]:
     if "pbf_ways" not in tables:
         raise SystemExit(f"extract {osmsrc} has no ways (need ways.parquet or a .pbf)")
     return tables
-
-
-def build_tables(
-    spark: SparkSession,
-    dbdir: str,
-    osmsrc: str,
-    suffix: str | list[str],
-    existing: str | list[str] | None,
-    deletions: str | list[str] | None,
-) -> dict[str, DataFrame]:
-    """Assemble the pipeline's table dict from discovered parquet files
-    (merged single-run mode)."""
-    suffixes = [suffix] if isinstance(suffix, str) else list(suffix)
-    source = ParquetSource(spark, dbdir) if isinstance(dbdir, str) else dbdir
-    names = source.discover(suffixes)
-    if not names:
-        raise SystemExit(f"no tables matching *{suffixes} in {source.describe()}")
-    tables = load_new_parts(spark, source, names)
-
-    for ex in _aslist(existing):
-        df = source.load_geo(ex)
-        tables["original_ways"] = (
-            tables["original_ways"].unionByName(df, allowMissingColumns=True)
-            if "original_ways" in tables
-            else df
-        )
-    for dl in _aslist(deletions):
-        df = source.load_plain(dl)
-        tables["deleted_ways"] = (
-            tables["deleted_ways"].unionByName(df, allowMissingColumns=True)
-            if "deleted_ways" in tables
-            else df
-        )
-    tables.update(load_extract(spark, osmsrc))
-    return tables
-
-
-def _aslist(v) -> list[str]:
-    if v is None:
-        return []
-    return [v] if isinstance(v, str) else list(v)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -304,9 +242,8 @@ def main(argv: list[str] | None = None) -> int:
         if str(args.max_nodes_per_way).lower() == "none"
         else int(args.max_nodes_per_way)
     )
-    suffixes = _aslist(args.suffix) or ["_new"]
+    suffixes = args.suffix or ["_new"]
 
-    from changegen_spark.operators.changes import assemble_changeset
     from changegen_spark.pipeline import (
         generate_changes,
         generate_deletions,
@@ -393,61 +330,43 @@ def main(argv: list[str] | None = None) -> int:
         raise SystemExit(f"nothing to do: no tables matching *{suffixes} in {source.describe()} and no --deletions")
 
     ex_tables: dict[str, DataFrame] = {}
-    for ex in _aslist(args.existing):
-        df = source.load_geo(ex)
-        ex_tables["original_ways"] = (
-            ex_tables["original_ways"].unionByName(df, allowMissingColumns=True)
-            if "original_ways" in ex_tables
-            else df
-        )
+    if args.existing:
+        ex_tables["original_ways"] = assemble_changeset(*map(source.load_geo, args.existing))
 
-    wrote: list[str] = []
+    def write(elements: DataFrame, out: str) -> None:
+        counts = write_osmchange(elements, out, compress=args.compress)
+        print(f"wrote {out}: {counts}", file=sys.stderr)
+
     if args.outdir:
         # reference mode: one {table}.osc per new-feature table
         # (changegen/__main__.py:232-251) + one per deletions table (:253-263)
         os.makedirs(args.outdir, exist_ok=True)
+        wrote: list[str] = []
         for name in names:
-            tables = {**load_new_parts(spark, source, [name]), **ex_tables, **extract}
+            tables = {**load_new_parts(source, [name]), **ex_tables, **extract}
             elements = run_one(tables)
             if elements is None:
                 continue
             out = os.path.join(args.outdir, f"{name}.osc")
-            counts = write_osmchange(elements, out, compress=args.compress)
-            print(f"wrote {out}: {counts}", file=sys.stderr)
+            write(elements, out)
             wrote.append(out)
-        for dl in _aslist(args.deletions):
-            tables = {
-                "deleted_ways": source.load_plain(dl),
-                **extract,
-            }
-            elements = generate_deletions(spark, tables)
+        for dl in args.deletions or []:
+            elements = generate_deletions(spark, {"deleted_ways": source.load_plain(dl), **extract})
             out = os.path.join(args.outdir, f"{dl}.osc")
-            counts = write_osmchange(elements, out, compress=args.compress)
-            print(f"wrote {out}: {counts}", file=sys.stderr)
+            write(elements, out)
             wrote.append(out)
         if not wrote:
             raise SystemExit("nothing to do: no new tables, deletions, or modify_meta")
         return 0
 
     # merged single-file mode
-    parts = []
-    tables = {**load_new_parts(spark, source, names), **ex_tables, **extract}
-    for dl in _aslist(args.deletions):
-        df = source.load_plain(dl)
-        tables["deleted_ways"] = (
-            tables["deleted_ways"].unionByName(df, allowMissingColumns=True)
-            if "deleted_ways" in tables
-            else df
-        )
-    result = run_one(tables)
-    if result is not None:
-        parts.append(result)
-    if not parts:
+    tables = {**load_new_parts(source, names), **ex_tables, **extract}
+    if args.deletions:
+        tables["deleted_ways"] = assemble_changeset(*map(source.load_plain, args.deletions))
+    elements = run_one(tables)
+    if elements is None:
         raise SystemExit("nothing to do: no new tables, deletions, or modify_meta")
-
-    elements = assemble_changeset(*parts)
-    counts = write_osmchange(elements, args.output, compress=args.compress)
-    print(f"wrote {args.output}: {counts}", file=sys.stderr)
+    write(elements, args.output)
     return 0
 
 

@@ -21,18 +21,38 @@ VERSION_MODIFY = 2
 VERSION_DELETE = 99  # placeholder version, changegen/generator.py:919
 
 
+_VERSIONS = {"create": VERSION_CREATE, "modify": VERSION_MODIFY, "delete": VERSION_DELETE}
+
+
+def _version(change_type: str) -> int:
+    if change_type not in _VERSIONS:
+        raise ValueError(f"unknown change_type {change_type!r}")
+    return _VERSIONS[change_type]
+
+
 def tag_change(df: DataFrame, change_type: str) -> DataFrame:
     """C1/C2/C3: stamp rows with a change type and its version contract."""
-    versions = {"create": VERSION_CREATE, "modify": VERSION_MODIFY, "delete": VERSION_DELETE}
-    if change_type not in versions:
-        raise ValueError(f"unknown change_type {change_type!r}")
     return df.withColumn("change_type", F.lit(change_type)).withColumn(
-        "version", F.lit(versions[change_type])
+        "version", F.lit(_version(change_type))
+    )
+
+
+def stamp(df: DataFrame, change_type: str, kind: str, id_col: str, *cols) -> DataFrame:
+    """Project ``df`` to OSM element rows: the ``change_type``/``kind``/``id``/
+    ``version`` header under the version contract, then ``cols`` (the
+    element's lat/lon, nds, members and tags; see sinks.oscxml.ELEMENT_SCHEMA)."""
+    return df.select(
+        F.lit(change_type).alias("change_type"),
+        F.lit(kind).alias("kind"),
+        F.col(id_col).alias("id"),
+        F.lit(_version(change_type)).alias("version"),
+        *cols,
     )
 
 
 def assemble_changeset(*parts: DataFrame) -> DataFrame:
-    """Union change-tagged DataFrames by name (missing columns → null).
+    """Union DataFrames by name (missing columns → null): change-tagged
+    element parts, or same-role input tables read from several sources.
 
     Mirrors the output assembly concatenation (``generator.py:758-766,852-866``)
     as a ``unionByName`` — order sensitivity is handled at the sink, not here.

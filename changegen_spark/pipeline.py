@@ -27,20 +27,23 @@ ordered XML sink.
 from __future__ import annotations
 
 import contextlib
-import os
-import sys
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-# Eager local checkpoints (measured, see SCALE.md): each localCheckpoint
-# call pays physical planning + codegen compile at call time whether eager
-# or not, and lazy materialization lets multiple consumers race to compute
-# the same partitions — eager is strictly better here.  Env flip kept for
-# re-measurement.
-CHECKPOINT_EAGER = os.environ.get("CHANGEGEN_LAZY_CKPT", "") != "1"
+from changegen_spark.geo.geometry import exterior, g_type
+from changegen_spark.geo.mercator import to_4326_lat, to_4326_lon
+from changegen_spark.geo.segments import explode_segments, segment_distance_join
+from changegen_spark.operators.changes import assemble_changeset, expand_deleted_ways, stamp
+from changegen_spark.operators.ids import check_id_collision
+from changegen_spark.operators.tags import merge_hstore_tags, parse_hstore
+from changegen_spark.operators.ways import (
+    CHUNK_SIZE_DEFAULT,
+    NODE_LIMIT_DEFAULT,
+    cumulative_fraction,
+    line_locate_fraction,
+    split_ways,
+)
 
 # Input size (bytes, Catalyst plan stats) below which the pipeline plans
 # its checkpoint fences WITHOUT whole-stage codegen.  Janino compilation of
@@ -49,9 +52,7 @@ CHECKPOINT_EAGER = os.environ.get("CHANGEGEN_LAZY_CKPT", "") != "1"
 # stays on), but on an interactive small-diff run it IS the latency floor,
 # and interpreted execution of a few thousand rows is equally fast.  The
 # same size-adaptive reasoning as AQE, applied to compile time.
-SMALL_INPUT_CODEGEN_OFF_BYTES = int(
-    os.environ.get("CHANGEGEN_CODEGEN_OFF_BYTES", 256 * 1024 * 1024)
-)
+SMALL_INPUT_CODEGEN_OFF_BYTES = 256 * 1024 * 1024
 
 
 def _inputs_are_small(tables: dict) -> bool:
@@ -95,29 +96,6 @@ def _maybe_interpreted(spark: SparkSession, interpreted: bool):
         for k, v in prev.items():
             spark.conf.set(k, v)
 
-
-@contextlib.contextmanager
-def _timed(label: str):
-    """Phase timing to stderr when CHANGEGEN_TIMING=1 (perf attribution)."""
-    if not os.environ.get("CHANGEGEN_TIMING"):
-        yield
-        return
-    t0 = time.time()
-    yield
-    print(f"[changegen-timing] {label}: {time.time() - t0:.2f}s", file=sys.stderr)
-
-from changegen_spark.geo.geometry import exterior, g_type, interiors
-from changegen_spark.geo.mercator import to_4326_lat, to_4326_lon
-from changegen_spark.geo.segments import explode_segments, segment_distance_join
-from changegen_spark.operators.ids import check_id_collision
-from changegen_spark.operators.tags import merge_hstore_tags, parse_hstore
-from changegen_spark.operators.ways import (
-    CHUNK_SIZE_DEFAULT,
-    NODE_LIMIT_DEFAULT,
-    cumulative_fraction,
-    line_locate_fraction,
-    split_ways,
-)
 
 DISTANCE_BUFFER_DEFAULT = 5.0  # changegen/db.py:110 (meters in EPSG:3857)
 PRECISION = 6  # COORDINATE_PRECISION, changegen/generator.py:31
@@ -180,10 +158,7 @@ def synthesize_junctions(
     new_ways: DataFrame,
     existing_ways: DataFrame,
     key_col: str,
-    distance_buffer: float = DISTANCE_BUFFER_DEFAULT,
     self_intersections: bool = False,
-    checkpoint: bool = False,
-    eager: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Stage A: (junction_nodes keyed by rounded lon/lat, per-pair junctions).
 
@@ -204,7 +179,7 @@ def synthesize_junctions(
         F.col("__ring"),
         prefix="r",
     )
-    pairs = segment_distance_join(lsegs, rsegs, distance_buffer, dedup_pairs=False)
+    pairs = segment_distance_join(lsegs, rsegs, DISTANCE_BUFFER_DEFAULT, dedup_pairs=False)
     # one junction per (new, existing) pair: the globally closest approach
     best = pairs.groupBy("nkey", "osm_id").agg(
         F.min_by(
@@ -235,7 +210,7 @@ def synthesize_junctions(
             prefix="r",
         )
         self_pairs = segment_distance_join(
-            lsegs, osegs, distance_buffer, dedup_pairs=False
+            lsegs, osegs, DISTANCE_BUFFER_DEFAULT, dedup_pairs=False
         ).filter(
             F.col("nkey") != F.col("okey")
         )
@@ -253,18 +228,15 @@ def synthesize_junctions(
         junctions = junctions.unionByName(self_junctions)
     rlon, rlat = _rounded_lonlat(F.col("jx"), F.col("jy"))
     junctions = junctions.withColumn("rlon", rlon).withColumn("rlat", rlat)
-    if checkpoint:
-        # ONE materialization of the segment-join pipeline; junction_nodes
-        # stays a lazy (trivial) agg over the checkpointed rows — a second
-        # dedicated checkpoint job cost more than the per-consumer re-agg.
-        # (The r1 shape — independent checkpoints of nodes AND junctions —
-        # analyzed and executed the whole segment join twice.)
-        # eager=False + a caller-side async force lets the materialization
-        # job overlap the driver's stage-B/C plan building (r3) — the
-        # lineage fence (LogicalRDD) exists either way.
-        junctions = junctions.localCheckpoint(
-            eager=CHECKPOINT_EAGER if eager is None else eager
-        )
+    # ONE materialization of the segment-join pipeline; junction_nodes
+    # stays a lazy (trivial) agg over the checkpointed rows — a second
+    # dedicated checkpoint job cost more than the per-consumer re-agg.
+    # (The r1 shape — independent checkpoints of nodes AND junctions —
+    # analyzed and executed the whole segment join twice.)
+    # Lazy: the lineage fence (LogicalRDD) exists immediately, and the
+    # materialization job overlaps the driver's stage-B/C plan building
+    # (r3), running inside stage C's eager fence job.
+    junctions = junctions.localCheckpoint(eager=False)
     # A3 grid dedup: one node per 6-dp cell
     junction_nodes = junctions.groupBy("rlon", "rlat").agg(
         F.min(to_4326_lon(F.col("jx"))).alias("lon"),
@@ -294,15 +266,12 @@ def build_new_ways(
     junction_nodes: DataFrame,
     junctions: DataFrame,
     key_col: str,
-    tag_exclude: tuple[str, ...] = ("geometry",),
     hstore_col: str | None = None,
-    node_limit: int = NODE_LIMIT_DEFAULT,
-    chunk_size: int = CHUNK_SIZE_DEFAULT,
 ) -> dict[str, DataFrame]:
     """Stage B: create-path ways + their nodes.
 
     Returns dict with 'vertex_nodes' (unmatched vertices needing fresh ids),
-    'way_rows' (nkey, chunk, ordered member keys), 'way_tags'.
+    'ordered_members' (nkey, sorted member keys), 'way_tags'.
     Junction handling: a junction equal to a way vertex at 6 dp reuses the
     junction node (J4, generator.py:430-443); otherwise it is inserted at
     its fractional position (W2/M2, generator.py:208-255,458-487)."""
@@ -310,12 +279,13 @@ def build_new_ways(
         F.col(key_col).alias("nkey"), exterior(F.col("geometry")).alias("__ring")
     )
     # verts feeds four downstream joins; truncating its (windowed) lineage
-    # keeps every consumer's analysis tree shallow
-    verts = _vertices_with_frac(geoms, ["nkey"])
-    if os.environ.get("CHANGEGEN_VERTS_CKPT", "1") == "1":
-        # no barrier needed: verts derive from new_ways only, so this
-        # eager job cannot race the junction materialization
-        verts = verts.localCheckpoint(eager=CHECKPOINT_EAGER)
+    # keeps every consumer's analysis tree shallow.  Eager (measured, see
+    # SCALE.md): each localCheckpoint pays physical planning + codegen
+    # compile at call time either way, and lazy materialization lets
+    # multiple consumers race to compute the same partitions.  No barrier
+    # needed: verts derive from new_ways only, so this job cannot race the
+    # junction materialization.
+    verts = _vertices_with_frac(geoms, ["nkey"]).localCheckpoint(eager=True)
 
     jn = junction_nodes.select("rlon", "rlat")
     matched = verts.join(jn, ["rlon", "rlat"], "inner").select(
@@ -391,15 +361,13 @@ def build_new_ways(
     # synthetic "__"-prefixed keys are dropped by _tags_map automatically.
     way_tags = new_ways.select(
         F.col(key_col).alias("nkey"),
-        _tags_map(new_ways, tag_exclude, hstore_col).alias("tags"),
+        _tags_map(new_ways, ("geometry",), hstore_col).alias("tags"),
     )
 
     return {
         "vertex_nodes": unmatched,
         "ordered_members": ordered,
         "way_tags": way_tags,
-        "node_limit": node_limit,
-        "chunk_size": chunk_size,
     }
 
 
@@ -407,7 +375,6 @@ def modify_intersecting_ways(
     existing_ways: DataFrame,
     junctions: DataFrame,
     pbf_ways: DataFrame,
-    ckpt_barrier=None,
 ) -> DataFrame:
     """Stage C: rebuild intersecting existing ways with junction nodes.
 
@@ -429,16 +396,9 @@ def modify_intersecting_ways(
     nds = pbf_ways.select(
         F.col("id").alias("osm_id"), F.posexplode("nds").alias("pos", "node_id")
     )
-    # missing pbf → skipped; checkpoint: same multi-consumer fan-out as the
-    # create path
-    verts = verts.join(nds, ["osm_id", "pos"], "inner")
-    if os.environ.get("CHANGEGEN_VERTS_CKPT", "1") == "1":
-        if ckpt_barrier is not None:
-            # this subtree consumes the junction frame (hit_ways): wait for
-            # its async materialization so a lazy junction checkpoint is
-            # never computed twice by racing consumers
-            ckpt_barrier()
-        verts = verts.localCheckpoint(eager=CHECKPOINT_EAGER)
+    # missing pbf → skipped; eager checkpoint: same multi-consumer fan-out
+    # as the create path
+    verts = verts.join(nds, ["osm_id", "pos"], "inner").localCheckpoint(eager=True)
 
     # Same one-row-per-(way, cell) dedup as the create path: low-order jx/jy
     # jitter within a 6-dp cell must not duplicate insert candidates.
@@ -511,7 +471,6 @@ def generate_changes(
     id_offset: int = 0,
     negative_ids: bool = False,
     self_intersections: bool = False,
-    distance_buffer: float = DISTANCE_BUFFER_DEFAULT,
     node_limit: int = NODE_LIMIT_DEFAULT,
     chunk_size: int = CHUNK_SIZE_DEFAULT,
     skip_delete_nodes: bool = True,
@@ -536,7 +495,6 @@ def generate_changes(
     reference (the CLI's ``--reference-bytes``)."""
     import concurrent.futures
 
-    from changegen_spark.operators.changes import expand_deleted_ways
     from changegen_spark.sources.osm import max_pbf_ids
 
     # Overlapped head (r3, measured on scale_smoke 300×200): the max-id
@@ -555,7 +513,6 @@ def generate_changes(
     cs = ChangeSet(spark)
     new_ways = tables.get("new_ways")
     existing = tables.get("original_ways")
-    way_key_col = key_col
 
     # Small inputs: plan the checkpoint fences interpreted (see
     # SMALL_INPUT_CODEGEN_OFF_BYTES) — the conf stays off through the
@@ -572,16 +529,13 @@ def generate_changes(
     try:
         # A: junctions (single evaluation serves J1 closest-points AND J2 ids)
         if new_ways is not None and existing is not None:
-            # checkpoint=True truncates lineage inside: every downstream stage
-            # re-references the junction frames many times, and the segment-join
-            # expression tree is deep — one materialization bounds Catalyst
-            # analysis cost for all consumers.
-            with _timed("A:junctions(build)"):
-                junction_nodes, junctions = synthesize_junctions(
-                    new_ways, existing, key_col=way_key_col,
-                    distance_buffer=distance_buffer, self_intersections=self_intersections,
-                    checkpoint=True, eager=False,
-                )
+            # synthesize_junctions truncates lineage inside: every downstream
+            # stage re-references the junction frames many times, and the
+            # segment-join expression tree is deep — one materialization
+            # bounds Catalyst analysis cost for all consumers.
+            junction_nodes, junctions = synthesize_junctions(
+                new_ways, existing, key_col=key_col, self_intersections=self_intersections
+            )
         else:
             junction_nodes = spark.createDataFrame(
                 [], "rlon double, rlat double, lon double, lat double"
@@ -593,15 +547,12 @@ def generate_changes(
         cs.request_ids(junction_nodes, _K_JUNCTION, jkey)
 
         if fut_maxids is not None:
-            with _timed("head:max_pbf_ids"):
-                maxids = fut_maxids.result()
+            maxids = fut_maxids.result()
             check_id_collision(max(maxids.values()), id_offset, negative_ids)
 
         # B: new ways.  Way splitting happens on the member-KEY sequences, so
         # way ids can be requested in the same single resolve as node ids (the
         # chunk count depends only on member counts, not on resolved ids).
-        nb = None
-        chunked_members = None
         wkey = F.concat_ws(":", F.col("nkey"), F.col("chunk"))
         # Stages B and C are independent once the junction frame is
         # materialized; each ends in an eager localCheckpoint (a separate Spark
@@ -611,9 +562,8 @@ def generate_changes(
         # resolve() orders by (kind, key), so request order is immaterial.
         def _stage_b():
             nb_ = build_new_ways(
-                cs, new_ways, junction_nodes, junctions, key_col=way_key_col,
+                cs, new_ways, junction_nodes, junctions, key_col=key_col,
                 hstore_col=hstore_col,
-                node_limit=node_limit, chunk_size=chunk_size,
             )
             cm = split_ways(
                 nb_["ordered_members"], nds_col="mseq",
@@ -678,20 +628,18 @@ def generate_changes(
             cs.request_ids(poly_parts["relations"], _K_RELATION, F.col("pkey"))
 
         # G: deletions
-        del_ways = del_nodes = None
+        del_elems = []
         if tables.get("deleted_ways") is not None:
-            del_ways, del_nodes = expand_deleted_ways(
-                tables["deleted_ways"], tables["pbf_ways"], skip_nodes=skip_delete_nodes
+            del_elems = _deletion_elements(
+                tables["deleted_ways"], tables["pbf_ways"], skip_delete_nodes
             )
 
         # join the overlapped B/C stages
         if fut_b is not None:
-            with _timed("B:build_new_ways"):
-                nb, chunked_members = fut_b.result()
+            nb, chunked_members = fut_b.result()
             cs.request_ids(chunked_members, _K_WAY, wkey)
         if fut_c is not None:
-            with _timed("C:modify_intersecting"):
-                mod_ways_seq = fut_c.result()
+            mod_ways_seq = fut_c.result()
             # hstore expansion applies to intersecting-way modifies exactly
             # as it does to new features (generator.py:190-203 → :812).
             mod_excl = (
@@ -710,8 +658,7 @@ def generate_changes(
         codegen_scope.__exit__(None, None, None)
 
     # --- resolve ids and assemble elements ---
-    with _timed("ids:resolve"):
-        ids = cs.resolve(id_offset, negative_ids).cache()
+    ids = cs.resolve(id_offset, negative_ids).cache()
 
     def with_id(df: DataFrame, kind: int, skey) -> DataFrame:
         keyed = df.withColumn("__skey", skey.cast("string"))
@@ -722,23 +669,16 @@ def generate_changes(
 
     empty_tags = F.create_map().cast("map<string,string>")
 
-    junction_node_elems = with_id(junction_nodes, _K_JUNCTION, jkey).select(
-        F.lit("create").alias("change_type"),
-        F.lit("node").alias("kind"),
-        F.col("new_id").alias("id"),
-        F.lit(1).alias("version"),
-        "lat", "lon",
-        empty_tags.alias("tags"),
+    junction_node_elems = stamp(
+        with_id(junction_nodes, _K_JUNCTION, jkey), "create", "node", "new_id",
+        "lat", "lon", empty_tags.alias("tags"),
     )
 
     vkey = F.concat_ws(":", F.col("nkey"), F.col("pos"))
     vertex_elems = None
     if nb is not None:
-        vertex_elems = with_id(nb["vertex_nodes"], _K_VERTEX, vkey).select(
-            F.lit("create").alias("change_type"),
-            F.lit("node").alias("kind"),
-            F.col("new_id").alias("id"),
-            F.lit(1).alias("version"),
+        vertex_elems = stamp(
+            with_id(nb["vertex_nodes"], _K_VERTEX, vkey), "create", "node", "new_id",
             to_4326_lat(F.col("y")).alias("lat"),
             to_4326_lon(F.col("x")).alias("lon"),
             empty_tags.alias("tags"),
@@ -746,14 +686,9 @@ def generate_changes(
 
     point_elems = None
     if pts is not None:
-        point_elems = with_id(
-            pts, _K_POINT, F.concat(F.lit("pt:"), F.col("pt_id"))
-        ).select(
-            F.lit("create").alias("change_type"),
-            F.lit("node").alias("kind"),
-            F.col("new_id").alias("id"),
-            F.lit(1).alias("version"),
-            "lat", "lon", "tags",
+        point_elems = stamp(
+            with_id(pts, _K_POINT, F.concat(F.lit("pt:"), F.col("pt_id"))),
+            "create", "node", "new_id", "lat", "lon", "tags",
         )
 
     # new-way member resolution: junction members → junction node ids,
@@ -761,7 +696,6 @@ def generate_changes(
     jids = with_id(junction_nodes, _K_JUNCTION, jkey).select(
         "rlon", "rlat", F.col("new_id").alias("jid")
     )
-    with_id2 = with_id  # single resolve covers every element kind
 
     new_way_elems = None
     if chunked_members is not None:
@@ -789,12 +723,8 @@ def generate_changes(
                 lambda s: s.getField("node_ref"),
             ).alias("nds")
         )
-        new_way_elems = chunk_nds.join(nb["way_tags"], "nkey").select(
-            F.lit("create").alias("change_type"),
-            F.lit("way").alias("kind"),
-            F.col("way_id").alias("id"),
-            F.lit(1).alias("version"),
-            "nds", "tags",
+        new_way_elems = stamp(
+            chunk_nds.join(nb["way_tags"], "nkey"), "create", "way", "way_id", "nds", "tags"
         )
 
     # modified existing ways: junction members → junction ids, vertex
@@ -818,53 +748,18 @@ def generate_changes(
                 lambda s: s.getField("node_ref"),
             ).alias("nds")
         )
-        mod_way_elems = mod_nds.join(mod_way_tags, "osm_id").select(
-            F.lit("modify").alias("change_type"),
-            F.lit("way").alias("kind"),
-            F.col("osm_id").alias("id"),
-            F.lit(2).alias("version"),
-            "nds", "tags",
+        mod_way_elems = stamp(
+            mod_nds.join(mod_way_tags, "osm_id"), "modify", "way", "osm_id", "nds", "tags"
         )
 
-    # deletions (version 99 placeholder, generator.py:919-925)
-    del_way_elems = del_node_elems = None
-    if del_ways is not None:
-        del_way_elems = del_ways.select(
-            F.lit("delete").alias("change_type"),
-            F.lit("way").alias("kind"),
-            F.col("id"),
-            F.lit(99).alias("version"),
-            empty_tags.alias("tags"),
-        )
-        del_node_elems = del_nodes.select(
-            F.lit("delete").alias("change_type"),
-            F.lit("node").alias("kind"),
-            F.col("id"),
-            F.lit(99).alias("version"),
-            F.lit(0.0).alias("lat"),
-            F.lit(0.0).alias("lon"),
-            empty_tags.alias("tags"),
-        )
-
-    with _timed("tail:union"):
-        parts = [
+    parts = [
         p
-        for p in (
-            junction_node_elems,
-            vertex_elems,
-            point_elems,
-            new_way_elems,
-            mod_way_elems,
-            del_way_elems,
-            del_node_elems,
-        )
+        for p in (junction_node_elems, vertex_elems, point_elems, new_way_elems, mod_way_elems)
         if p is not None
     ]
+    parts += del_elems
     if poly_parts is not None:
-        parts.extend(_assemble_polygons(poly_parts, with_id2, with_id))
-
-    from changegen_spark.operators.changes import assemble_changeset
-
+        parts += _assemble_polygons(poly_parts, with_id)
     return assemble_changeset(*parts)
 
 
@@ -907,16 +802,13 @@ def _build_polygons(cs: ChangeSet, polys: DataFrame) -> dict[str, DataFrame]:
     return {"verts": verts, "rings": rings, "relations": relations, "tags": tags}
 
 
-def _assemble_polygons(pp, with_id2, with_id) -> list[DataFrame]:
+def _assemble_polygons(pp, with_id) -> list[DataFrame]:
     """Stage E finish: nodes, closed ways, multipolygon relations."""
     empty_tags = F.create_map().cast("map<string,string>")
     nkey = F.concat_ws(":", F.lit("poly"), F.col("pkey"), F.col("ring_idx"), F.col("pos"))
     vid = with_id(pp["verts"], _K_POINT, nkey)
-    node_elems = vid.select(
-        F.lit("create").alias("change_type"),
-        F.lit("node").alias("kind"),
-        F.col("new_id").alias("id"),
-        F.lit(1).alias("version"),
+    node_elems = stamp(
+        vid, "create", "node", "new_id",
         to_4326_lat(F.col("y")).alias("lat"),
         to_4326_lon(F.col("x")).alias("lon"),
         empty_tags.alias("tags"),
@@ -929,15 +821,12 @@ def _assemble_polygons(pp, with_id2, with_id) -> list[DataFrame]:
         ).alias("open_nds")
     ).withColumn("nds", F.concat(F.col("open_nds"), F.slice(F.col("open_nds"), 1, 1)))
 
-    rid = with_id2(pp["rings"], _K_WAY, F.col("ring_key")).join(
+    rid = with_id(pp["rings"], _K_WAY, F.col("ring_key")).join(
         ring_nds, ["pkey", "ring_idx"]
     )
     simple_tags = pp["tags"].filter(F.col("__n_int") == 0).select("pkey", "tags")
-    way_elems = rid.join(simple_tags, "pkey", "left").select(
-        F.lit("create").alias("change_type"),
-        F.lit("way").alias("kind"),
-        F.col("new_id").alias("id"),
-        F.lit(1).alias("version"),
+    way_elems = stamp(
+        rid.join(simple_tags, "pkey", "left"), "create", "way", "new_id",
         "nds",
         F.coalesce(F.col("tags"), empty_tags).alias("tags"),
     )
@@ -965,17 +854,11 @@ def _assemble_polygons(pp, with_id2, with_id) -> list[DataFrame]:
             F.create_map(F.lit("type"), F.lit("multipolygon")).cast("map<string,string>"),
         ).alias("tags"),
     )
-    rel_elems = (
-        with_id2(pp["relations"], _K_RELATION, F.col("pkey"))
+    rel_elems = stamp(
+        with_id(pp["relations"], _K_RELATION, F.col("pkey"))
         .join(rel_members, "pkey")
-        .join(holed_tags, "pkey")
-        .select(
-            F.lit("create").alias("change_type"),
-            F.lit("relation").alias("kind"),
-            F.col("new_id").alias("id"),
-            F.lit(1).alias("version"),
-            "members", "tags",
-        )
+        .join(holed_tags, "pkey"),
+        "create", "relation", "new_id", "members", "tags",
     )
     return [node_elems, way_elems, rel_elems]
 
@@ -998,8 +881,6 @@ def generate_relation_changes(
     ids emit ``<delete>`` relations (version 99).  Apply-side semantics and
     the member-aware prune live in ``operators/apply.py``.
     """
-    from changegen_spark.operators.changes import assemble_changeset
-
     member_t = "array<struct<ref:bigint,type:string,role:string>>"
     empty_tags = F.create_map().cast("map<string,string>")
     parts: list[DataFrame] = []
@@ -1030,28 +911,13 @@ def generate_relation_changes(
             else F.col("__pbf_members")
         )
         parts.append(
-            joined.select(
-                F.lit("modify").alias("change_type"),
-                F.lit("relation").alias("kind"),
-                F.col("osm_id").alias("id"),
-                F.lit(2).alias("version"),
-                members.alias("members"),
-                "tags",
-            )
+            stamp(joined, "modify", "relation", "osm_id", members.alias("members"), "tags")
         )
 
     dels = tables.get(del_table)
     if dels is not None:
         ids = dels.select(F.col("osm_id").cast("long").alias("id")).distinct()
-        parts.append(
-            ids.select(
-                F.lit("delete").alias("change_type"),
-                F.lit("relation").alias("kind"),
-                "id",
-                F.lit(99).alias("version"),
-                empty_tags.alias("tags"),
-            )
-        )
+        parts.append(stamp(ids, "delete", "relation", "id", empty_tags.alias("tags")))
     if not parts:
         raise ValueError(f"neither {mod_table} nor {del_table} present in tables")
     return assemble_changeset(*parts)
@@ -1074,13 +940,8 @@ def generate_modify_meta(
     )
     keyed = mod.select(F.col("osm_id"), tags.alias("tags"))
     pbf = tables["pbf_ways"].select(F.col("id").alias("osm_id"), "nds")
-    return keyed.join(pbf, "osm_id", "inner").select(  # missing pbf → skipped
-        F.lit("modify").alias("change_type"),
-        F.lit("way").alias("kind"),
-        F.col("osm_id").alias("id"),
-        F.lit(2).alias("version"),
-        "nds", "tags",
-    )
+    joined = keyed.join(pbf, "osm_id", "inner")  # missing pbf → skipped
+    return stamp(joined, "modify", "way", "osm_id", "nds", "tags")
 
 
 def generate_modify_points(
@@ -1095,15 +956,28 @@ def generate_modify_points(
     mod = tables[table_name]
     tags = _tags_map(mod, exclude=("id", "osm_id", "geom"), hstore_col="tags")
     px, py = point_xy(F.col("geom"))
-    return mod.select(
-        F.lit("modify").alias("change_type"),
-        F.lit("node").alias("kind"),
-        F.col("osm_id").alias("id"),
-        F.lit(2).alias("version"),
+    return stamp(
+        mod, "modify", "node", "osm_id",
         to_4326_lat(py).alias("lat"),
         to_4326_lon(px).alias("lon"),
         tags.alias("tags"),
     )
+
+
+def _deletion_elements(
+    deleted_ways: DataFrame, pbf_ways: DataFrame, skip_nodes: bool
+) -> list[DataFrame]:
+    """C5 deletion elements, version 99 placeholder (generator.py:919-925):
+    way deletes, then the deletes of their nodes (none when skipped)."""
+    ways, nodes = expand_deleted_ways(deleted_ways, pbf_ways, skip_nodes=skip_nodes)
+    empty_tags = F.create_map().cast("map<string,string>")
+    return [
+        stamp(ways, "delete", "way", "id", empty_tags.alias("tags")),
+        stamp(
+            nodes, "delete", "node", "id",
+            F.lit(0.0).alias("lat"), F.lit(0.0).alias("lon"), empty_tags.alias("tags"),
+        ),
+    ]
 
 
 def generate_deletions(
@@ -1112,28 +986,6 @@ def generate_deletions(
     skip_nodes: bool = True,
 ) -> DataFrame:
     """C5 standalone deletion flow (changegen/generator.py:876-927)."""
-    from changegen_spark.operators.changes import expand_deleted_ways
-
-    empty_tags = F.create_map().cast("map<string,string>")
-    ways, nodes = expand_deleted_ways(
-        tables["deleted_ways"], tables["pbf_ways"], skip_nodes=skip_nodes
+    return assemble_changeset(
+        *_deletion_elements(tables["deleted_ways"], tables["pbf_ways"], skip_nodes)
     )
-    way_elems = ways.select(
-        F.lit("delete").alias("change_type"),
-        F.lit("way").alias("kind"),
-        F.col("id"),
-        F.lit(99).alias("version"),
-        empty_tags.alias("tags"),
-    )
-    node_elems = nodes.select(
-        F.lit("delete").alias("change_type"),
-        F.lit("node").alias("kind"),
-        F.col("id"),
-        F.lit(99).alias("version"),
-        F.lit(0.0).alias("lat"),
-        F.lit(0.0).alias("lon"),
-        empty_tags.alias("tags"),
-    )
-    from changegen_spark.operators.changes import assemble_changeset
-
-    return assemble_changeset(way_elems, node_elems)

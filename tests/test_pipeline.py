@@ -4,6 +4,7 @@ changefile, test/test_generator.py:94-230 — but with counts fixed by fixture
 construction per FIXTURES.md §8)."""
 
 import gzip
+import hashlib
 import os
 import xml.etree.ElementTree as ET
 
@@ -21,6 +22,17 @@ GOLDEN_CREATE_RELATIONS = 1
 GOLDEN_MODIFY_WAYS = 6
 GOLDEN_DELETE_WAYS = 2
 ID_OFFSET = 20_000
+
+# sha256 of the fixture changefile's .osc bytes (default flags, and the
+# CLI's --reference-bytes flags): a refactor must leave both unchanged; only
+# a deliberate output change may update them.
+OSC_SHA256_DEFAULT = "5520f3cdfb731b41215a88540af6803b7ce34c90e7dc4a803405062d39a2d4e6"
+OSC_SHA256_REFERENCE_BYTES = "f13acf748121b7d4a2e75f90ee79200ba06fb1c2a590cd5ad2a912694baea23a"
+
+
+def _sha256(path):
+    with open(path, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()
 
 
 @pytest.fixture(scope="module")
@@ -170,6 +182,7 @@ def test_xml_sink_roundtrip(changeset, tmp_path):
     assert away.find("nd") is not None
     anode = root.find("./modify/way")
     assert anode.attrib["version"] == "2"
+    assert _sha256(out) == OSC_SHA256_DEFAULT
 
 
 def test_xml_sink_gzip(changeset, tmp_path):
@@ -259,14 +272,18 @@ def test_collision_abort_restores_session_state(spark, tables):
 
 
 @pytest.mark.slow
-def test_emit_osm_id_tag_reference_compat(spark, tables):
+def test_emit_osm_id_tag_reference_compat(spark, tables, tmp_path):
     """emit_osm_id_tag=True re-emits the source osm_id as a tag on modified
     intersecting ways (the reference's actual modify-path output,
-    generator.py:812-813); default run excludes it."""
+    generator.py:812-813); default run excludes it.  With
+    split_joiner="duplicate_first" this is the CLI's --reference-bytes
+    output, pinned by digest."""
     from changegen_spark.pipeline import generate_changes
+    from changegen_spark.sinks.oscxml import write_osmchange
 
     cs = generate_changes(
-        spark, tables, id_offset=ID_OFFSET, emit_osm_id_tag=True
+        spark, tables, id_offset=ID_OFFSET, emit_osm_id_tag=True,
+        split_joiner="duplicate_first",
     )
     mods = cs.filter(
         (F.col("kind") == "way") & (F.col("change_type") == "modify")
@@ -275,3 +292,6 @@ def test_emit_osm_id_tag_reference_compat(spark, tables):
     for r in mods:
         # a modified way's element id IS the original osm_id
         assert r["tags"].get("osm_id") == str(r["id"])
+    out = os.path.join(tmp_path, "ref.osc")
+    write_osmchange(cs, out)
+    assert _sha256(out) == OSC_SHA256_REFERENCE_BYTES
