@@ -132,50 +132,64 @@ def cumulative_fraction(
 
 def line_locate_fraction(
     vertices: DataFrame,
-    part_cols: list[str],
+    key_cols: list[str],
+    probes: DataFrame,
     px_col: str,
     py_col: str,
     pos_col: str = "pos",
     x_col: str = "x",
     y_col: str = "y",
 ) -> DataFrame:
-    """Normalized fractional position of a point projected onto a polyline
-    (``shapely project(normalized=True)`` / ST_LineLocatePoint, F7).
+    """Normalized fractional position of each probe point projected onto its
+    polyline (``shapely project(normalized=True)`` / ST_LineLocatePoint, F7).
 
-    Input: exploded vertices with the probe point's coordinates carried on
-    every row (``px_col``, ``py_col``).  Output: one row per ``part_cols``
-    group with ``point_frac``.  Implemented as segment-wise clamped projection
-    + ``min_by`` over squared distance — all built-ins, no UDF.
+    Input: ``vertices``, one row per polyline vertex (``key_cols``,
+    ``pos_col``, ``x_col``, ``y_col``), and ``probes``, one row per probe
+    point (``key_cols`` + ``px_col``/``py_col`` + any cargo columns, none
+    ``__``-prefixed).  Output: one row per probe — all its columns plus
+    ``point_frac``.
+
+    Each polyline's segment table is built once (cumulative fraction + one
+    ``lag``, O(V)) and equi-joined to that polyline's probes; the clamped
+    segment projection then reduces through ``min_by`` over (squared
+    distance, segment end pos), so on a tie the lower segment wins.  The
+    hash aggregate's partial step collapses the V×J candidate rows before
+    any exchange, and no window runs over probe rows.  All built-ins, no UDF.
+    A one-vertex polyline has no segment and yields no row.
     """
-    cf = cumulative_fraction(vertices, part_cols, pos_col, x_col, y_col)
-    w = Window.partitionBy(*part_cols).orderBy(pos_col)
-    ax, ay = F.lag(x_col).over(w), F.lag(y_col).over(w)  # segment start
-    bx, by = F.col(x_col), F.col(y_col)                  # segment end
-    seg = cf.withColumn("ax", ax).withColumn("ay", ay).filter(F.col("ax").isNotNull())
-    dx, dy = F.col(x_col) - F.col("ax"), F.col(y_col) - F.col("ay")
+    w = Window.partitionBy(*key_cols).orderBy(pos_col)
+    segs = cumulative_fraction(
+        vertices.withColumn("__ax", F.lag(x_col).over(w)).withColumn("__ay", F.lag(y_col).over(w)),
+        key_cols, pos_col, x_col, y_col,
+    ).filter(F.col("__ax").isNotNull()).select(
+        *key_cols,
+        F.col(pos_col).alias("__pos"),
+        "__ax", "__ay",
+        F.col(x_col).alias("__bx"),   # segment end
+        F.col(y_col).alias("__by"),
+        F.col("seg_len").alias("__seg_len"),
+        F.col("cum_len").alias("__cum_len"),
+        F.col("total_len").alias("__total_len"),
+    )
+    probe_cols = [c for c in probes.columns if c not in key_cols]
+    ax, ay = F.col("__ax"), F.col("__ay")
+    px, py = F.col(px_col), F.col(py_col)
+    dx, dy = F.col("__bx") - ax, F.col("__by") - ay
     seg_len2 = dx * dx + dy * dy
     t_raw = F.when(
-        seg_len2 > 0,
-        ((F.col(px_col) - F.col("ax")) * dx + (F.col(py_col) - F.col("ay")) * dy) / seg_len2,
+        seg_len2 > 0, ((px - ax) * dx + (py - ay) * dy) / seg_len2
     ).otherwise(F.lit(0.0))
     t = F.least(F.greatest(t_raw, F.lit(0.0)), F.lit(1.0))
-    qx = F.col("ax") + t * dx
-    qy = F.col("ay") + t * dy
-    d2 = F.pow(F.col(px_col) - qx, 2) + F.pow(F.col(py_col) - qy, 2)
-    seg = seg.withColumn("__t", t).withColumn("__d2", d2)
+    qx = ax + t * dx
+    qy = ay + t * dy
+    d2 = F.pow(px - qx, 2) + F.pow(py - qy, 2)
+    seg_len, total_len = F.col("__seg_len"), F.col("__total_len")
     # fraction at the projected point = frac at segment start + t * seg share
-    seg = seg.withColumn(
-        "__frac_here",
-        F.when(
-            F.col("total_len") > 0,
-            (F.col("cum_len") - F.col("seg_len") + F.col("__t") * F.col("seg_len"))
-            / F.col("total_len"),
-        ).otherwise(F.lit(0.0)),
-    )
-    return seg.groupBy(*part_cols).agg(
-        F.min_by(
-            F.col("__frac_here"), F.struct(F.col("__d2"), F.col(pos_col))
-        ).alias("point_frac")
+    frac_here = F.when(
+        total_len > 0, (F.col("__cum_len") - seg_len + t * seg_len) / total_len
+    ).otherwise(F.lit(0.0))
+    return segs.join(probes, key_cols).groupBy(*key_cols, *probe_cols).agg(
+        F.min_by(frac_here, F.struct(d2, F.col("__pos"))).alias("point_frac")
     )
 
 
@@ -192,10 +206,16 @@ def insertion_index(
 
     The reference (``generator.py:208-255``) returns the first vertex index
     whose cumulative fractional distance exceeds the point's projected
-    fraction.  Output: ``part_cols`` + ``insert_idx``.
+    fraction.  Input: vertices carrying their polyline's probe point on
+    every row.  Output: ``part_cols`` + ``insert_idx``.
     """
     cf = cumulative_fraction(vertices, part_cols, pos_col, x_col, y_col)
-    pf = line_locate_fraction(vertices, part_cols, px_col, py_col, pos_col, x_col, y_col)
+    pf = line_locate_fraction(
+        vertices.select(*part_cols, pos_col, x_col, y_col),
+        part_cols,
+        vertices.select(*part_cols, px_col, py_col).distinct(),
+        px_col, py_col, pos_col, x_col, y_col,
+    ).select(*part_cols, "point_frac")
     joined = cf.join(pf, part_cols)
     past = joined.filter(F.col("frac") > F.col("point_frac"))
     return past.groupBy(*part_cols).agg(F.min(pos_col).cast("long").alias("insert_idx"))

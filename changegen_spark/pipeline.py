@@ -299,8 +299,8 @@ def build_new_ways(
     # differ in low-order bits within the same cell (e.g. a new way crossing
     # an existing way AND another new way at the same spot — the duplicate
     # case the reference dedups, generator.py:132-142); a plain distinct()
-    # would keep both and double every vertex row inside the
-    # line_locate_fraction window, corrupting the insertion fraction.
+    # would keep both as separate line_locate_fraction probes and insert
+    # the same junction node into the way twice.
     way_j = (
         junctions.groupBy("nkey", "rlon", "rlat")
         .agg(F.min_by(F.struct("jx", "jy"), F.struct("jx", "jy")).alias("__j"))
@@ -309,23 +309,13 @@ def build_new_ways(
     to_insert = way_j.join(
         verts.select("nkey", "rlon", "rlat"), ["nkey", "rlon", "rlat"], "left_anti"
     )
-    ins_input = verts.select("nkey", "pos", "x", "y").join(
-        to_insert.select(
-            "nkey",
-            F.col("jx").alias("px"),
-            F.col("jy").alias("py"),
-            F.col("rlon").alias("jrlon"),
-            F.col("rlat").alias("jrlat"),
-        ),
-        "nkey",
-    )
     inserted = line_locate_fraction(
-        ins_input, ["nkey", "jrlon", "jrlat"], "px", "py"
+        verts.select("nkey", "pos", "x", "y"), ["nkey"], to_insert, "jx", "jy"
     ).select(
         "nkey",
         F.col("point_frac").alias("frac"),
-        F.col("jrlon").alias("rlon"),
-        F.col("jrlat").alias("rlat"),
+        "rlon",
+        "rlat",
         F.lit(True).alias("is_junction"),
         F.lit(None).cast("int").alias("pos"),
     )
@@ -421,23 +411,13 @@ def modify_intersecting_ways(
     to_insert = way_j.join(
         verts.select("osm_id", "rlon", "rlat"), ["osm_id", "rlon", "rlat"], "left_anti"
     )
-    ins_input = verts.select("osm_id", "pos", "x", "y").join(
-        to_insert.select(
-            "osm_id",
-            F.col("jx").alias("px"),
-            F.col("jy").alias("py"),
-            F.col("rlon").alias("jrlon"),
-            F.col("rlat").alias("jrlat"),
-        ),
-        "osm_id",
-    )
     inserted = line_locate_fraction(
-        ins_input, ["osm_id", "jrlon", "jrlat"], "px", "py"
+        verts.select("osm_id", "pos", "x", "y"), ["osm_id"], to_insert, "jx", "jy"
     ).select(
         "osm_id",
         F.col("point_frac").alias("frac"),
-        F.col("jrlon").alias("rlon"),
-        F.col("jrlat").alias("rlat"),
+        "rlon",
+        "rlat",
         F.lit(True).alias("is_junction"),
         F.lit(None).cast("int").alias("pos"),
         F.lit(None).cast("long").alias("node_id"),
@@ -502,11 +482,13 @@ def generate_changes(
     # junction plan — py4j/Catalyst work — removing ~2 s of serial
     # wall-clock.  The junction checkpoint is created LAZY (the LogicalRDD
     # lineage fence exists immediately, bounding every consumer's analysis
-    # tree) and materializes inside stage C's eager checkpoint job — the
-    # single plan-phase consumer of the junction frame, so no duplicate
-    # compute and one fused job instead of two.  Stage B's checkpoint
-    # derives from new_ways only and safely runs concurrently.  Collision
-    # check stays fail-fast: its result is read before any output exists.
+    # tree) and materializes inside whichever eager fence job reads it
+    # first: stage B's split-output fence or stage C's vertex fence.  Both
+    # read the one checkpoint RDD; a task of the other job waits on the
+    # block's write lock and reads the cached partition instead of
+    # recomputing it.  Stage B's vertex fence derives from new_ways only.
+    # Collision check stays fail-fast: its result is read before any
+    # output exists.
     pool = concurrent.futures.ThreadPoolExecutor(max_workers=4)
     fut_maxids = pool.submit(max_pbf_ids, tables) if check_collision else None
 
@@ -556,7 +538,10 @@ def generate_changes(
         wkey = F.concat_ws(":", F.col("nkey"), F.col("chunk"))
         # Stages B and C are independent once the junction frame is
         # materialized; each ends in an eager localCheckpoint (a separate Spark
-        # job with its own codegen compile).  Running them on two threads
+        # job with its own codegen compile).  Stage B's fence sits on the split
+        # output: resolve()'s way-id requests and the way elements both read
+        # it, so junction insertion, member sort and split run once instead
+        # of once per consumer.  Running them on two threads
         # overlaps those jobs — py4j releases the GIL on socket IO, and Spark
         # job submission is thread-safe.  cs.request_ids appends under the GIL;
         # resolve() orders by (kind, key), so request order is immaterial.
@@ -569,7 +554,7 @@ def generate_changes(
                 nb_["ordered_members"], nds_col="mseq",
                 node_limit=node_limit, chunk_size=chunk_size,
                 joiner=split_joiner,
-            )
+            ).localCheckpoint(eager=True)
             return nb_, cm
 
         def _stage_c():

@@ -4,6 +4,8 @@ golden: test/test_generator.py:234-252)."""
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 
@@ -99,6 +101,71 @@ def test_insertion_index_matches_numpy_reference(spark):
     df = _vertices_df(spark, coords.tolist(), float(point[0]), float(point[1]))
     out = insertion_index(df, ["way_id"], "px", "py").collect()
     assert out[0]["insert_idx"] == expected
+
+
+def _np_point_frac(coords, point):
+    """The numpy transcription above, with a zero-length segment projecting
+    at t=0; argmin keeps the first (lowest-pos) segment on a distance tie."""
+    import numpy as np
+
+    coords, point = np.asarray(coords, float), np.asarray(point, float)
+    seg_vecs = np.diff(coords, axis=0)
+    seg_len = np.linalg.norm(seg_vecs, axis=1)
+    cum = np.concatenate([[0], np.cumsum(seg_len)])
+    dot = np.einsum("ij,ij->i", point - coords[:-1], seg_vecs)
+    t = np.clip(
+        np.divide(dot, seg_len**2, out=np.zeros_like(dot), where=seg_len > 0), 0, 1
+    )
+    proj = coords[:-1] + t[:, None] * seg_vecs
+    d = np.linalg.norm(point - proj, axis=1)
+    best = int(np.argmin(d))
+    return (cum[best] + t[best] * seg_len[best]) / cum[-1]
+
+
+def test_line_locate_fraction_per_way_probes(spark):
+    """One vertex table and one probe table: several probes per way across
+    several ways, each located like the numpy transcription; a distance tie
+    goes to the lower segment; a one-vertex way yields no row."""
+    import numpy as np
+
+    from changegen_spark.operators.ways import line_locate_fraction
+
+    rng = np.random.default_rng(11)
+    ways = {
+        "irregular": np.cumsum(rng.uniform(0.2, 2.0, size=(12, 2)), axis=0).tolist(),
+        # (1.5, 0.5) is 0.5 from both segments: frac 0.375 (pos 1) beats 0.625
+        "corner": [(0.0, 0.0), (2.0, 0.0), (2.0, 2.0)],
+        # a duplicate vertex: zero-length segment 2
+        "dup": [(0.0, 0.0), (1.0, 0.0), (1.0, 0.0), (3.0, 0.0)],
+        "single": [(5.0, 5.0)],
+    }
+    probes = {
+        "irregular": [
+            tuple(np.asarray(ways["irregular"][i]) + rng.uniform(-0.4, 0.4, 2))
+            for i in (0, 3, 5, 8, 11)
+        ],
+        "corner": [(1.5, 0.5), (2.5, 1.0), (-1.0, -1.0)],
+        "dup": [(1.0, 0.5), (2.0, -0.5), (0.5, 0.0)],
+        "single": [(5.0, 6.0)],
+    }
+    vertices = spark.createDataFrame(
+        [(w, i, float(x), float(y)) for w, cs in ways.items() for i, (x, y) in enumerate(cs)],
+        "way_id string, pos int, x double, y double",
+    )
+    probe_df = spark.createDataFrame(
+        [(w, j, float(x), float(y)) for w, ps in probes.items() for j, (x, y) in enumerate(ps)],
+        "way_id string, pid int, px double, py double",
+    )
+    out = line_locate_fraction(vertices, ["way_id"], probe_df, "px", "py").collect()
+    got = {(r["way_id"], r["pid"]): r for r in out}
+
+    assert sorted(got) == sorted((w, j) for w, ps in probes.items() if w != "single" for j in range(len(ps)))
+    for (w, j), r in got.items():
+        assert (r["px"], r["py"]) == tuple(float(v) for v in probes[w][j])
+        assert r["point_frac"] == pytest.approx(_np_point_frac(ways[w], probes[w][j]), abs=1e-12)
+    assert got[("corner", 0)]["point_frac"] == 0.375
+    assert got[("dup", 0)]["point_frac"] == pytest.approx(1 / 3)
+    assert got[("dup", 1)]["point_frac"] == pytest.approx(2 / 3)
 
 
 def test_grid_dedup_last_wins(spark):
