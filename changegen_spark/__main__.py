@@ -244,6 +244,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     suffixes = args.suffix or ["_new"]
 
+    from changegen_spark.operators.ids import check_id_collision
     from changegen_spark.pipeline import (
         generate_changes,
         generate_deletions,
@@ -288,7 +289,9 @@ def main(argv: list[str] | None = None) -> int:
     # default, fatal only under --no_collisions.
     maxids = max_pbf_ids(extract)
     existing_max = max(maxids.values()) if maxids else 0
-    if not args.neg_id and args.id_offset <= existing_max:
+    try:
+        check_id_collision(existing_max, args.id_offset, args.neg_id)
+    except ValueError:
         msg = (
             f"Chosen ID offset {args.id_offset} may cause collisions with "
             f"existing OSM IDs (max ids: {maxids})."

@@ -9,10 +9,10 @@ extract ids (``changegen/__main__.py:197-208``).
 Scale note: a single global ``row_number`` means a one-partition shuffle of
 the *keys only* — acceptable for changefile-sized outputs (≪ memory), which is
 the only place dense ids are required.  For 100 TB-scale id assignment use
-``mode="distributed"``: ``monotonically_increasing_id`` gives per-partition
-unique (sparse) ids with zero shuffle, then an optional per-partition-offset
-pass (two tiny jobs: count per partition → prefix sum broadcast) yields dense
-ids without a global sort.
+``mode="distributed"``: each row gets its ``spark_partition_id`` and a
+``row_number`` within that partition; the per-partition counts are
+prefix-summed by a window over one row per partition and broadcast-joined
+back as offsets, which yields dense ids without a global sort.
 """
 
 from __future__ import annotations
@@ -54,8 +54,8 @@ def assign_sequential_ids(
         w = Window.orderBy(*[F.col(c) for c in order_by])
         rn = F.row_number().over(w).cast("long")
     elif mode == "distributed":
-        # Dense ids without a global shuffle: spark_partition_id + intra-
-        # partition row_number, then remap partition offsets driver-side.
+        # Dense ids without a global sort: spark_partition_id + intra-
+        # partition row_number, plus each partition's offset (below).
         part = F.spark_partition_id()
         w = Window.partitionBy(part).orderBy(*[F.col(c) for c in order_by])
         tagged = df.withColumn("__part", part).withColumn(

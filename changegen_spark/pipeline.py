@@ -28,14 +28,14 @@ from __future__ import annotations
 
 import contextlib
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from changegen_spark.geo.geometry import exterior, g_type
 from changegen_spark.geo.mercator import to_4326_lat, to_4326_lon
 from changegen_spark.geo.segments import explode_segments, segment_distance_join
 from changegen_spark.operators.changes import assemble_changeset, expand_deleted_ways, stamp
-from changegen_spark.operators.ids import check_id_collision
+from changegen_spark.operators.ids import assign_sequential_ids, check_id_collision
 from changegen_spark.operators.tags import merge_hstore_tags, parse_hstore
 from changegen_spark.operators.ways import (
     CHUNK_SIZE_DEFAULT,
@@ -125,6 +125,15 @@ def _tags_map(df: DataFrame, exclude: tuple[str, ...], hstore_col: str | None = 
     return col_tags
 
 
+def _sorted_values(order: str, value: str):
+    """Per-group array of ``value`` in ``order`` order: collect (order,
+    value) structs, sort them, strip the key — arrival order never leaks."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct(order, value))),
+        lambda s: s.getField(value),
+    )
+
+
 def _rounded_lonlat(x, y):
     return (
         F.round(to_4326_lon(x), PRECISION),
@@ -149,9 +158,9 @@ class ChangeSet:
         from functools import reduce
 
         allreq = reduce(lambda a, b: a.unionByName(b), self.requests).distinct()
-        w = Window.orderBy("korder", "skey")
-        seq = F.row_number().over(w).cast("long") + F.lit(id_offset)
-        return allreq.withColumn("new_id", -seq if negative else seq)
+        return assign_sequential_ids(
+            allreq, ["korder", "skey"], id_offset=id_offset, negative=negative
+        )
 
 
 def synthesize_junctions(
@@ -260,6 +269,80 @@ def _vertices_with_frac(geoms: DataFrame, key_cols: list[str]) -> DataFrame:
     return verts.withColumn("rlon", rlon).withColumn("rlat", rlat)
 
 
+def _weave_junctions(
+    verts: DataFrame,
+    key: str,
+    junctions: DataFrame,
+    cells: DataFrame,
+    cargo: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """Junction weave shared by the create and modify paths.
+
+    A vertex whose 6-dp cell is in ``cells`` becomes a junction member
+    (J4 reuse / junction replace); every other junction of the way that no
+    vertex coincides with is inserted at its fractional position (W2/M2,
+    generator.py:208-255,458-487).  ``cells`` is joined on all its
+    columns, so it states which junction nodes a vertex may reuse.
+    ``cargo`` vertex columns ride along on the vertex members (null on
+    junction members).  Returns ``(unmatched, ordered)``: the vertices on
+    no cell (all their columns), and per way its ``mseq`` member list
+    sorted by (frac, junction after vertex, pos).
+    """
+    # ONE row per (way, 6-dp cell): raw jx/jy from different pair joins can
+    # differ in low-order bits within the same cell (e.g. a new way crossing
+    # an existing way AND another new way at the same spot — the duplicate
+    # case the reference dedups, generator.py:132-142); a plain distinct()
+    # would keep both as separate line_locate_fraction probes and insert
+    # the same junction node into the way twice.
+    way_j = (
+        junctions.groupBy(key, "rlon", "rlat")
+        .agg(F.min_by(F.struct("jx", "jy"), F.struct("jx", "jy")).alias("__j"))
+        .select(key, F.col("__j.jx").alias("jx"), F.col("__j.jy").alias("jy"), "rlon", "rlat")
+    )
+    cols = [key, "pos", "frac", "rlon", "rlat"]
+    matched = verts.join(cells, cells.columns, "inner").select(
+        *cols, F.lit(True).alias("is_junction")
+    )
+    unmatched = verts.join(cells, cells.columns, "left_anti")
+
+    # junctions of this way not coincident with any of its vertices → insert
+    to_insert = way_j.join(
+        verts.select(key, "rlon", "rlat"), [key, "rlon", "rlat"], "left_anti"
+    )
+    inserted = line_locate_fraction(
+        verts.select(key, "pos", "x", "y"), [key], to_insert, "jx", "jy"
+    ).select(
+        key,
+        F.col("point_frac").alias("frac"),
+        "rlon",
+        "rlat",
+        F.lit(True).alias("is_junction"),
+        F.lit(None).cast("int").alias("pos"),
+    )
+
+    members = (
+        unmatched.select(*cols, F.lit(False).alias("is_junction"), *cargo)
+        .unionByName(matched, allowMissingColumns=True)
+        .unionByName(inserted, allowMissingColumns=True)
+    )
+    ordered = members.groupBy(key).agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col("frac"),
+                    F.col("is_junction").cast("int").alias("jflag"),
+                    F.coalesce(F.col("pos"), F.lit(0)).alias("pos"),
+                    F.col("rlon"),
+                    F.col("rlat"),
+                    F.col("is_junction"),
+                    *cargo,
+                )
+            )
+        ).alias("mseq")
+    )
+    return unmatched, ordered
+
+
 def build_new_ways(
     cs: ChangeSet,
     new_ways: DataFrame,
@@ -272,9 +355,9 @@ def build_new_ways(
 
     Returns dict with 'vertex_nodes' (unmatched vertices needing fresh ids),
     'ordered_members' (nkey, sorted member keys), 'way_tags'.
-    Junction handling: a junction equal to a way vertex at 6 dp reuses the
-    junction node (J4, generator.py:430-443); otherwise it is inserted at
-    its fractional position (W2/M2, generator.py:208-255,458-487)."""
+    Junction handling: a vertex on ANY junction node's 6-dp cell reuses
+    that node (J4, generator.py:430-443); the way's other junctions are
+    inserted at their fractional positions (``_weave_junctions``)."""
     geoms = new_ways.select(
         F.col(key_col).alias("nkey"), exterior(F.col("geometry")).alias("__ring")
     )
@@ -286,66 +369,13 @@ def build_new_ways(
     # needed: verts derive from new_ways only, so this job cannot race the
     # junction materialization.
     verts = _vertices_with_frac(geoms, ["nkey"]).localCheckpoint(eager=True)
-
-    jn = junction_nodes.select("rlon", "rlat")
-    matched = verts.join(jn, ["rlon", "rlat"], "inner").select(
-        "nkey", "pos", "frac", "rlon", "rlat",
-        F.lit(True).alias("is_junction"),
-    )
-    unmatched = verts.join(jn, ["rlon", "rlat"], "left_anti")
-
-    # junctions of this way not coincident with any of its vertices → insert.
-    # ONE row per (way, 6-dp cell): raw jx/jy from different pair joins can
-    # differ in low-order bits within the same cell (e.g. a new way crossing
-    # an existing way AND another new way at the same spot — the duplicate
-    # case the reference dedups, generator.py:132-142); a plain distinct()
-    # would keep both as separate line_locate_fraction probes and insert
-    # the same junction node into the way twice.
-    way_j = (
-        junctions.groupBy("nkey", "rlon", "rlat")
-        .agg(F.min_by(F.struct("jx", "jy"), F.struct("jx", "jy")).alias("__j"))
-        .select("nkey", F.col("__j.jx").alias("jx"), F.col("__j.jy").alias("jy"), "rlon", "rlat")
-    )
-    to_insert = way_j.join(
-        verts.select("nkey", "rlon", "rlat"), ["nkey", "rlon", "rlat"], "left_anti"
-    )
-    inserted = line_locate_fraction(
-        verts.select("nkey", "pos", "x", "y"), ["nkey"], to_insert, "jx", "jy"
-    ).select(
-        "nkey",
-        F.col("point_frac").alias("frac"),
-        "rlon",
-        "rlat",
-        F.lit(True).alias("is_junction"),
-        F.lit(None).cast("int").alias("pos"),
+    unmatched, ordered = _weave_junctions(
+        verts, "nkey", junctions, junction_nodes.select("rlon", "rlat")
     )
 
     # id requests for unmatched vertices
     vkey = F.concat_ws(":", F.col("nkey"), F.col("pos"))
     cs.request_ids(unmatched, _K_VERTEX, vkey)
-
-    members = (
-        unmatched.select(
-            "nkey", "pos", "frac", "rlon", "rlat", F.lit(False).alias("is_junction")
-        )
-        .unionByName(matched)
-        .unionByName(inserted, allowMissingColumns=True)
-    )
-    # ordered member list per way (frac, junction-after-vertex tie, pos)
-    ordered = members.groupBy("nkey").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("frac"),
-                    F.col("is_junction").cast("int").alias("jflag"),
-                    F.coalesce(F.col("pos"), F.lit(0)).alias("pos"),
-                    F.col("rlon"),
-                    F.col("rlat"),
-                    F.col("is_junction"),
-                )
-            )
-        ).alias("mseq")
-    )
 
     # key_col stays IN the tag map when it is a real attribute (e.g. name);
     # synthetic "__"-prefixed keys are dropped by _tags_map automatically.
@@ -373,7 +403,8 @@ def modify_intersecting_ways(
     fractional insertion.  Ways missing from the extract are skipped, the
     reference's logged case (generator.py:820-822).
     Output: (osm_id, member structs sorted) — ids resolved later."""
-    hit_ways = junctions.filter(F.col("osm_id").isNotNull()).select("osm_id").distinct()
+    hits = junctions.filter(F.col("osm_id").isNotNull())
+    hit_ways = hits.select("osm_id").distinct()
     # Polygon intersection-modify is out of contract, matching the
     # reference's logged-unsupported case (changegen/generator.py:836-847):
     # non-LineString existing geometries are excluded from the rebuild.
@@ -390,59 +421,10 @@ def modify_intersecting_ways(
     # as the create path
     verts = verts.join(nds, ["osm_id", "pos"], "inner").localCheckpoint(eager=True)
 
-    # Same one-row-per-(way, cell) dedup as the create path: low-order jx/jy
-    # jitter within a 6-dp cell must not duplicate insert candidates.
-    way_j = (
-        junctions.filter(F.col("osm_id").isNotNull())
-        .groupBy("osm_id", "rlon", "rlat")
-        .agg(F.min_by(F.struct("jx", "jy"), F.struct("jx", "jy")).alias("__j"))
-        .select("osm_id", F.col("__j.jx").alias("jx"), F.col("__j.jy").alias("jy"), "rlon", "rlat")
-    )
-    matched = verts.join(
-        way_j.select("osm_id", "rlon", "rlat").distinct(), ["osm_id", "rlon", "rlat"], "inner"
-    ).select("osm_id", "pos", "frac", "rlon", "rlat", F.lit(True).alias("is_junction"))
-    unmatched = verts.join(
-        way_j.select("osm_id", "rlon", "rlat").distinct(), ["osm_id", "rlon", "rlat"], "left_anti"
-    ).select(
-        "osm_id", "pos", "frac", "rlon", "rlat",
-        F.lit(False).alias("is_junction"), F.col("node_id"),
-    )
-
-    to_insert = way_j.join(
-        verts.select("osm_id", "rlon", "rlat"), ["osm_id", "rlon", "rlat"], "left_anti"
-    )
-    inserted = line_locate_fraction(
-        verts.select("osm_id", "pos", "x", "y"), ["osm_id"], to_insert, "jx", "jy"
-    ).select(
-        "osm_id",
-        F.col("point_frac").alias("frac"),
-        "rlon",
-        "rlat",
-        F.lit(True).alias("is_junction"),
-        F.lit(None).cast("int").alias("pos"),
-        F.lit(None).cast("long").alias("node_id"),
-    )
-
-    members = (
-        unmatched
-        .unionByName(matched.withColumn("node_id", F.lit(None).cast("long")), allowMissingColumns=True)
-        .unionByName(inserted)
-    )
-    return members.groupBy("osm_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("frac"),
-                    F.col("is_junction").cast("int").alias("jflag"),
-                    F.coalesce(F.col("pos"), F.lit(0)).alias("pos"),
-                    F.col("rlon"),
-                    F.col("rlat"),
-                    F.col("is_junction"),
-                    F.col("node_id"),
-                )
-            )
-        ).alias("mseq")
-    )
+    # only this way's own junctions replace its vertices
+    cells = hits.select("osm_id", "rlon", "rlat").distinct()
+    _, ordered = _weave_junctions(verts, "osm_id", hits, cells, cargo=("node_id",))
+    return ordered
 
 
 def generate_changes(
@@ -703,10 +685,7 @@ def generate_changes(
             .withColumn("node_ref", F.when(F.col("is_junction"), F.col("jid")).otherwise(F.coalesce("vid", "jid")))
         )
         chunk_nds = mem.groupBy("nkey", "chunk", "way_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seq", "node_ref"))),
-                lambda s: s.getField("node_ref"),
-            ).alias("nds")
+            _sorted_values("seq", "node_ref").alias("nds")
         )
         new_way_elems = stamp(
             chunk_nds.join(nb["way_tags"], "nkey"), "create", "way", "way_id", "nds", "tags"
@@ -727,12 +706,7 @@ def generate_changes(
         mmem = mmem.join(jids, ["rlon", "rlat"], "left").withColumn(
             "node_ref", F.when(F.col("is_junction"), F.col("jid")).otherwise(F.col("node_id"))
         )
-        mod_nds = mmem.groupBy("osm_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seq", "node_ref"))),
-                lambda s: s.getField("node_ref"),
-            ).alias("nds")
-        )
+        mod_nds = mmem.groupBy("osm_id").agg(_sorted_values("seq", "node_ref").alias("nds"))
         mod_way_elems = stamp(
             mod_nds.join(mod_way_tags, "osm_id"), "modify", "way", "osm_id", "nds", "tags"
         )
@@ -800,10 +774,7 @@ def _assemble_polygons(pp, with_id) -> list[DataFrame]:
     )
     # ordered nds per ring, closed by repeating the first node (M4)
     ring_nds = vid.groupBy("pkey", "ring_idx").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "new_id"))),
-            lambda s: s.getField("new_id"),
-        ).alias("open_nds")
+        _sorted_values("pos", "new_id").alias("open_nds")
     ).withColumn("nds", F.concat(F.col("open_nds"), F.slice(F.col("open_nds"), 1, 1)))
 
     rid = with_id(pp["rings"], _K_WAY, F.col("ring_key")).join(
@@ -826,12 +797,7 @@ def _assemble_polygons(pp, with_id) -> list[DataFrame]:
         ).alias("m"),
         "ring_idx",
     )
-    rel_members = rel_members.groupBy("pkey").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("ring_idx"), F.col("m")))),
-            lambda s: s.getField("m"),
-        ).alias("members")
-    )
+    rel_members = rel_members.groupBy("pkey").agg(_sorted_values("ring_idx", "m").alias("members"))
     holed_tags = pp["tags"].filter(F.col("__n_int") > 0).select(
         "pkey",
         F.map_concat(

@@ -10,8 +10,7 @@ schema (see ``ELEMENT_SCHEMA``); the sink is the one deliberately
 driver-side stage of the engine — ``toLocalIterator`` streams sorted
 partitions through a constant-memory serializer, so the driver never holds
 the full changefile.  Changefiles are ≪ cluster data by construction (they
-are diffs), so a single ordered file is the right contract; for huge diffs
-the same serializer can run per-partition to sharded files + concat.
+are diffs), so a single ordered file is the right contract.
 
 Determinism contract (SURVEY §7 risk 2): block order create→modify→delete;
 within a block elements sort by (kind: node<way<relation, id).  Referential
@@ -116,148 +115,6 @@ def _write_element(f: IO[str], row) -> None:
             f'  <member type="{_esc(m["type"])}" ref="{m["ref"]}" role="{_esc(m["role"])}"/>\n'
         )
     f.write(f"</{kind}>\n")
-
-
-def element_xml(row) -> str:
-    """One element serialized as an XML fragment (no block wrapper).
-
-    Accepts Row or pandas-record dicts; Arrow hands maps to pandas as
-    key/value tuple lists and missing doubles as NaN — normalized here so
-    the executor-side path emits byte-identical XML to the driver path.
-    """
-    import io
-
-    r = dict(row.asDict() if hasattr(row, "asDict") else row)
-    if isinstance(r.get("tags"), (list, tuple)):
-        r["tags"] = dict(r["tags"])
-    for k in ("lat", "lon"):
-        v = r.get(k)
-        if v is not None and v != v:  # NaN
-            r[k] = None
-    nds = r.get("nds")
-    if nds is not None and not isinstance(nds, list):
-        r["nds"] = list(nds)
-    members = r.get("members")
-    if members is not None:
-        r["members"] = [
-            m if isinstance(m, dict) else m.asDict() for m in members
-        ]
-    buf = io.StringIO()
-    _write_element(buf, r)
-    return buf.getvalue()
-
-
-def write_osmchange_sharded(
-    elements: DataFrame,
-    path: str,
-    shards_per_block: int = 8,
-    generator: str = "changegen_spark",
-    timings: dict | None = None,
-) -> dict[str, int]:
-    """Scale-path sink: serialization runs ON THE EXECUTORS.
-
-    Per change block: range-partition by (kind, id) → sort within
-    partitions → mapInPandas serializes each element to an XML fragment
-    string → write.text shard files.  The driver only streams header +
-    shard bytes + footer into the final file (pure I/O concat, no parsing,
-    no row materialization) — the piece of the reference's streaming
-    ``etree.xmlfile`` contract (changewriter.py:133) that must NOT be
-    driver-bound at 100 TB.
-
-    Returns per-block counts.  Output is byte-identical to
-    ``write_osmchange``.
-
-    ``timings``, if given, receives a {"spark_s", "concat_s"} breakdown —
-    distributed serialization+write vs the driver-side shard concat (the
-    piece that could become the constant at very large changefiles; the
-    concat is a BINARY block copy, no decode/encode, so it runs at disk
-    bandwidth — measured r5: <10%% of sink time at 3.8M junction pairs).
-    """
-    import glob as _glob
-    import shutil
-    import tempfile
-    import time as _time
-
-    from pyspark.sql.types import StringType, StructField as SF, StructType as ST
-
-    missing = set(f.name for f in ELEMENT_SCHEMA.fields) - set(elements.columns)
-    for col in missing:
-        elements = elements.withColumn(
-            col, F.lit(None).cast(ELEMENT_SCHEMA[col].dataType)
-        )
-    elements = elements.select(*[f.name for f in ELEMENT_SCHEMA.fields])
-    order_kind = F.element_at(
-        F.create_map(*[x for k, v in _KIND_ORDER.items() for x in (F.lit(k), F.lit(v))]),
-        F.col("kind"),
-    )
-
-    def serialize(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            # the text sink appends one newline per row — strip the
-            # fragment's own trailing newline so bytes match the driver sink
-            frags = [
-                element_xml(row).rstrip("\n") for row in pdf.to_dict("records")
-            ]
-            yield pd.DataFrame({"xml": frags})
-
-    # ONE execution of the element plan: fence it, then the per-block
-    # counts and the three shard writes all read the materialized rows.
-    # (The r3 shape ran the full upstream plan up to six times — a count
-    # plus a write per change block — measured as the dominant e2e cost
-    # at 300×200: sink 13.0 s, of which ~10 s was plan re-execution.)
-    elements = elements.localCheckpoint(eager=False)
-    t0 = _time.time()
-    counts = {"create": 0, "modify": 0, "delete": 0}
-    counts.update(
-        {
-            r["change_type"]: r["n"]
-            for r in elements.groupBy("change_type").agg(F.count("*").alias("n")).collect()
-        }
-    )
-    spark_s = _time.time() - t0
-    concat_s = 0.0
-    tmp = tempfile.mkdtemp(prefix="osc_shards_")
-    try:
-        # binary concat: the shard files are already UTF-8 bytes — a text-
-        # mode copy would decode+re-encode every byte on the driver
-        with open(path, "wb") as out:
-            out.write(b'<?xml version="1.0" encoding="UTF-8"?>\n')
-            out.write(
-                f'<osmChange version="0.6" generator="{_esc(generator)}">\n'.encode()
-            )
-            for block in ("create", "modify", "delete"):
-                n = counts[block]
-                if n == 0:
-                    continue
-                part = elements.filter(F.col("change_type") == block)
-                shard_dir = f"{tmp}/{block}"
-                t0 = _time.time()
-                (
-                    part.withColumn("__ko", order_kind)
-                    .repartitionByRange(shards_per_block, "__ko", "id")
-                    .sortWithinPartitions("__ko", "id")
-                    .drop("__ko")
-                    .mapInPandas(serialize, ST([SF("xml", StringType())]))
-                    .write.mode("overwrite")
-                    .text(shard_dir)
-                )
-                spark_s += _time.time() - t0
-                t0 = _time.time()
-                out.write(f"<{block}>\n".encode())
-                for shard in sorted(_glob.glob(f"{shard_dir}/part-*")):
-                    with open(shard, "rb") as f:
-                        shutil.copyfileobj(f, out, 1 << 20)
-                out.write(f"</{block}>\n".encode())
-                concat_s += _time.time() - t0
-            out.write(b"</osmChange>\n")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    if timings is not None:
-        timings["spark_s"] = round(spark_s, 2)
-        timings["concat_s"] = round(concat_s, 2)
-    return counts
 
 
 def write_osmchange(

@@ -1,5 +1,5 @@
 """Pipeline scale smoke: a parametric road network ~500× the unit-fixture
-junction count, end-to-end through generate_changes + the sharded sink.
+junction count, end-to-end through generate_changes + write_osmchange.
 
 Usage: python tools/scale_smoke.py [n_orig] [n_new]
 
@@ -82,7 +82,7 @@ def build_network(spark, n_orig: int, n_new: int):
 def main() -> None:
     from changegen_spark.pipeline import generate_changes
     from changegen_spark.session import get_spark
-    from changegen_spark.sinks.oscxml import write_osmchange_sharded
+    from changegen_spark.sinks.oscxml import write_osmchange
 
     n_orig = int(sys.argv[1]) if len(sys.argv) > 1 else 300
     n_new = int(sys.argv[2]) if len(sys.argv) > 2 else 200
@@ -116,10 +116,7 @@ def main() -> None:
     t_plan = time.time() - t0
 
     t0 = time.time()
-    sink_t: dict = {}
-    counts = write_osmchange_sharded(
-        cset, "/tmp/scale_smoke.osc", shards_per_block=16, timings=sink_t
-    )
+    counts = write_osmchange(cset, "/tmp/scale_smoke.osc")
     t_exec = time.time() - t0
 
     print(
@@ -133,8 +130,6 @@ def main() -> None:
                 "build_s": round(t_build, 1),
                 "plan_s": round(t_plan, 1),
                 "execute_and_sink_s": round(t_exec, 1),
-                "sink_spark_s": sink_t.get("spark_s"),
-                "sink_concat_s": sink_t.get("concat_s"),
             }
         )
     )
